@@ -304,6 +304,8 @@ def trim_log_message(log_message: str) -> str:
     """R7 entry — failure → original (LogFilter.filterLogMessage)."""
     try:
         jo = json.loads(log_message)
+        if not isinstance(jo, dict):
+            return log_message
         _trim_node(jo)
         return _dumps(jo)
     except Exception:

@@ -1,6 +1,9 @@
-"""Predicate fan-out router (F5-F11, SURVEY.md §3.1 Spark restatement).
+"""The router (F5-F11, SURVEY.md §3.1 Spark restatement).
 
-Splits the pages stream into the reference's routed sub-streams:
+Like the reference's single LogParserTask pass (LogParserTask.java:92-126),
+each line is routed once. `routed_parse` computes the routing flags and runs
+the Arrow parse in one scan; `derive_streams` is the one definition of the
+sub-streams cut from its output:
 
   oversized   >1 MiB lines dropped whole by the bounded-line reader (S3)
   ignored     pre-parse ignore filter hits, with 12-way category (F7/K6)
@@ -12,8 +15,10 @@ Splits the pages stream into the reference's routed sub-streams:
   transactions, client_metadata, auth, conn_lifecycle
   ops         dispatched main-operation rows (extract.extract_ops)
 
-Each stream is a lazy DataFrame off the same scan; pipeline.build persists
-`kept`/`ops` so the Arrow parse runs once per materialization wave.
+Two modes, one derivation: `split_streams` derives from the lazy
+routed_parse frame (contract queries, streaming, interactive use), and
+pipeline.build derives from the same frame checkpointed to parquet and read
+back, so the oracle checks the code the job runs.
 """
 
 from __future__ import annotations
@@ -25,44 +30,76 @@ from ..functions import prefilter
 from ..functions.extract import extract_ops
 from ..functions.parse import conn_id, ns_coll, ns_db, parse_lines
 
+ROUTE_FLAG_COLS = ("is_ignored", "is_ttl", "category")
 
-def split_streams(pages: DataFrame,
-                  ignore_patterns: list[str] | None = None) -> dict[str, DataFrame]:
+
+def routed_parse(pages: DataFrame,
+                 ignore_patterns: list[str] | None = None) -> DataFrame:
+    """ONE-scan routed parse (guide §2.4: remove passes outright).
+
+    Computes the routing predicates once per bounded line (JVM, whole-stage
+    codegen), then runs the Arrow parse over every bounded line with the
+    tokenizer skipped for ignored non-TTL rows (they emit null parse fields,
+    exactly the unparseable-line path). TTL lines are always parsed: they are
+    also counted as ignored (LogParser.java:641-649), so the skip predicate
+    is `ignore AND NOT ttl`. Output = parsed schema + ROUTE_FLAG_COLS."""
     text = F.col("text")
-    bounded = pages.filter(~prefilter.is_oversized(text))
-    oversized = pages.filter(prefilter.is_oversized(text))
-
     ignore = prefilter.should_ignore(text, ignore_patterns)
-    ignored = bounded.filter(ignore).withColumn(
-        "category", prefilter.ignored_category(text)
+    is_ttl = prefilter.is_ttl_line(text)
+    flagged = (
+        pages.filter(~prefilter.is_oversized(text))
+        .drop("html")
+        .withColumn("is_ignored", ignore)
+        .withColumn("is_ttl", is_ttl)
+        .withColumn("category", F.when(ignore, prefilter.ignored_category(text)))
+        .withColumn("skip_parse", ignore & ~is_ttl)
     )
-    # html is never consumed downstream of the router — drop it before the
-    # parse so the (cacheable) parsed stream doesn't carry the binary payload
-    kept_raw = bounded.filter(~ignore).drop("html")
-    kept = parse_lines(kept_raw)
+    return parse_lines(flagged, extra_cols=ROUTE_FLAG_COLS, skip_col="skip_parse")
 
-    # TTL pre-pass (processTtlOperation, LogParser.java:938-970): parse,
-    # require attr.namespace, namespace filter, take numDeleted/durationMillis
-    ttl_raw = bounded.filter(prefilter.is_ttl_line(text)).drop("html")
-    ttl_pre = ttl_pre_records(parse_lines(ttl_raw), pages.columns)
 
+def derive_streams(pages: DataFrame, routed: DataFrame,
+                   conn_side: DataFrame | None = None) -> dict[str, DataFrame]:
+    """Every routed stream, cut from `routed` — the lazy routed_parse(pages)
+    frame or its checkpoint read back — with filters and projections only.
+
+    conn_side: optional subset of the kept rows that client_metadata, auth
+    and conn_lifecycle are read from instead of `kept` (pipeline.build's
+    shared subset scan); each record filter implies the subset predicate,
+    so rows and schema are the same either way."""
+    kept = routed.filter(~F.col("is_ignored")).drop(*ROUTE_FLAG_COLS)
+    conn_side = kept if conn_side is None else conn_side
+    ignored = routed.filter(F.col("is_ignored")).select(
+        *[c for c in ("url", "warc_ts", "lang", "text", "shard", "node")
+          if c in routed.columns],
+        # ignored_category() always resolves (its CASE has an otherwise), so
+        # this coalesce never fires — it only restores the non-null schema
+        # the when(ignore, …) flag column erased.
+        F.coalesce(F.col("category"), F.lit("OTHER")).alias("category"),
+    )
     return {
-        "oversized": oversized,
+        "oversized": pages.filter(prefilter.is_oversized(F.col("text"))),
         "ignored": ignored,
         "kept": kept,
-        "ttl_pre": ttl_pre,
+        "ttl_pre": ttl_pre_records(routed.filter(F.col("is_ttl")), pages.columns),
+        "ops": extract_ops(kept),
         "errors": error_records(kept),
         "transactions": transaction_records(kept),
-        "client_metadata": client_metadata_records(kept),
-        "auth": auth_records(kept),
-        "conn_lifecycle": conn_lifecycle_records(kept),
-        "ops": extract_ops(kept),
+        "client_metadata": client_metadata_records(conn_side),
+        "auth": auth_records(conn_side),
+        "conn_lifecycle": conn_lifecycle_records(conn_side),
     }
 
 
+def split_streams(pages: DataFrame,
+                  ignore_patterns: list[str] | None = None) -> dict[str, DataFrame]:
+    """The lazy streams: derive_streams over the un-checkpointed routed parse."""
+    return derive_streams(pages, routed_parse(pages, ignore_patterns))
+
+
 def ttl_pre_records(ttl_parsed: DataFrame, pages_columns: list[str]) -> DataFrame:
-    """TTL pre-pass projection over already-parsed TTL lines (the shared tail
-    of split_streams' ttl_pre and the routed-checkpoint derivation)."""
+    """TTL pre-pass (processTtlOperation, LogParser.java:938-970) over parsed
+    TTL lines: require attr.namespace, namespace filter, take
+    numDeleted/durationMillis."""
     shard_cols = [c for c in ("shard", "node") if c in pages_columns]
     return (
         ttl_parsed.filter(F.col("a_namespace").isNotNull())
@@ -76,46 +113,6 @@ def ttl_pre_records(ttl_parsed: DataFrame, pages_columns: list[str]) -> DataFram
         .withColumn("coll", ns_coll(F.col("ns")))
         .filter(F.col("db").isNull() | (F.col("db") != "config"))
     )
-
-
-ROUTE_FLAG_COLS = ("is_ignored", "is_ttl", "category")
-
-
-def routed_parse(pages: DataFrame,
-                 ignore_patterns: list[str] | None = None) -> DataFrame:
-    """ONE-scan routed parse (guide §2.4: remove shuffles/passes outright —
-    here the removed cost is three extra full scans of the raw text column).
-
-    split_streams() hands each consumer a lazy view over the raw scan, so a
-    materializing pipeline paid four decompressions of `text` per wave: the
-    kept parse, the TTL pre-pass parse, and the ignored/ignored-sample
-    predicate scans. This operator computes the routing predicates ONCE (JVM,
-    whole-stage codegen — identical expressions to split_streams), then runs
-    the Arrow parse over every bounded line with parse skipped for
-    ignored-non-TTL rows (they emit null parse fields, exactly the
-    unparseable-line path). Output = parsed schema + ROUTE_FLAG_COLS, from
-    which pipeline.build derives kept / ignored / ttl_pre with column-pruned
-    scans of one checkpoint instead of re-reading the raw table.
-
-    Row/field equivalence with split_streams (oracle-checked downstream):
-    - kept:   rows !is_ignored, parse fields from the same _parse_row
-    - ignored: rows is_ignored, same first-match category expression
-    - ttl:    rows is_ttl are always parsed (TTL lines are also counted as
-              ignored — LogParser.java:641-649 — so the skip predicate is
-              `ignore AND NOT ttl`)
-    """
-    text = F.col("text")
-    ignore = prefilter.should_ignore(text, ignore_patterns)
-    is_ttl = prefilter.is_ttl_line(text)
-    flagged = (
-        pages.filter(~prefilter.is_oversized(text))
-        .drop("html")
-        .withColumn("is_ignored", ignore)
-        .withColumn("is_ttl", is_ttl)
-        .withColumn("category", F.when(ignore, prefilter.ignored_category(text)))
-        .withColumn("skip_parse", ignore & ~is_ttl)
-    )
-    return parse_lines(flagged, extra_cols=ROUTE_FLAG_COLS, skip_col="skip_parse")
 
 
 def ignored_sample(ignored: DataFrame, rate: int = 100) -> DataFrame:

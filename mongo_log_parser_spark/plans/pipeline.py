@@ -3,24 +3,18 @@
   scan → prefilter (F1-F4) → vectorized parse (E1-E2) → route (F5-F11)
        → extract (E3-E20) → aggregates (A1-A12) + joins (J1-J3) → sinks
 
-Stage materialization strategy (measured at sf0.1, local[32]):
-  parquet   write `routed` (parsed + routing flags, ONE raw scan for
-            kept/ignored/TTL — route.routed_parse) and `ops` (dispatched) to
-            parquet and read them back. One Arrow parse total; every
-            downstream consumer reads flat columnar data with
-            pruning/pushdown. 10x faster than Spark's in-memory cache here
-            (InMemoryRelation encode of wide rows was the bottleneck), and it
-            is exactly the stage-checkpoint pattern a 100 TB pipeline uses
-            between parse and aggregate waves.
-  bucketed  like parquet, but the ops checkpoint is written as a parquet
-            table bucketed+sorted by query_hash (sinks/bucketed.py): one
-            repartition at write time, then the whole A4/A5/A5b query-hash
-            family (groupBys + the kv-submap join) runs with zero Exchange
-            because the scan itself carries HashPartitioning(query_hash).
-            The layout a 100 TB deployment would choose when the query-hash
-            analyses dominate the workload.
-  memory    .persist(MEMORY_AND_DISK) barriers (kept for comparison).
-  none      fully lazy — right for small interactive/correctness queries.
+One router: every stream comes from route.derive_streams over the one-scan
+route.routed_parse frame. `build` runs it in one of two modes:
+
+  cache=True   (default) write the routed frame (parsed + routing flags:
+               kept, ignored and TTL in one scan, one Arrow parse, one
+               write) and the dispatched `ops` to parquet under a `stage-*`
+               workdir, and derive every stream from the read-back
+               checkpoints. Each sink then scans flat columnar data with
+               pruning and pushdown — the stage-checkpoint pattern a large
+               pipeline uses between the parse and aggregate waves.
+  cache=False  the same derivation over the lazy routed frame — right for
+               small interactive/correctness queries.
 """
 
 from __future__ import annotations
@@ -32,7 +26,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..operators import aggregates as agg
 from ..operators import joins, route
@@ -56,98 +49,35 @@ class PipelineResult:
     streams: dict[str, DataFrame]
     sinks: dict[str, DataFrame] = field(default_factory=dict)
     workdir: str | None = None
-    tables: list[str] = field(default_factory=list)
 
     def unpersist(self) -> None:
-        for name in self.tables:
-            try:
-                from ..sinks import bucketed
-
-                bucketed.drop_bucketed(
-                    next(iter(self.streams.values())).sparkSession, name)
-            except Exception:
-                pass
-        for df in self.streams.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
         if self.workdir:
             shutil.rmtree(self.workdir, ignore_errors=True)
+
+
+def _checkpoint(df: DataFrame, path: str) -> DataFrame:
+    """Write `df` to parquet and read it back. The explicit schema skips the
+    footer-inference job on read-back."""
+    schema = df.schema
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(schema).parquet(path)
 
 
 def build(
     pages: DataFrame,
     cache: bool = True,
-    materialize: str = "parquet",
     workdir: str | None = None,
-    ops_checkpoint: bool = True,
     ignore_patterns: list[str] | None = None,
 ) -> PipelineResult:
-    spark = pages.sparkSession
-    tables: list[str] = []
-    if cache and materialize in ("parquet", "bucketed"):
-        # Don't construct the full lazy split_streams DAG here: every entry
-        # except `oversized` is immediately replaced by its checkpoint-derived
-        # form below, and building the lazy trees (two parse plans, the
-        # extract cascade, five side channels) costs seconds of driver-side
-        # analysis per run — pure serial floor at every parallelism width.
-        from ..functions import prefilter
-
-        streams = {"oversized": pages.filter(prefilter.is_oversized(F.col("text")))}
-        workdir = workdir or os.path.join(
-            datagen.DATA_ROOT, "tmp", f"stage-{uuid.uuid4().hex[:8]}"
-        )
-        # ONE routed checkpoint (route.routed_parse): kept + ignored + TTL in
-        # a single scan/parse/write. Before round 6 this phase wrote only
-        # `kept` and left ignored/ttl_pre as lazy views over the RAW table, so
-        # one materialization wave decompressed the raw text column four
-        # times (kept parse, ttl parse, ignored, ignored_sample — measured
-        # 28.8 + 4.4 + 5.5 + 5.5 s of the 53 s sf1.0 headline). Now the three
-        # sink families scan the column-pruned checkpoint instead; the write
-        # grows only by the ignored rows' text bytes (~18% of rows, null
-        # parse fields — free under parquet RLE).
-        # Checkpoint first, then derive `ops` FROM the checkpoint before
-        # writing it — otherwise the ops write re-runs the full mapInPandas
-        # parse over every kept line (2x parse cost; this was the round-1
-        # scaling-gate failure).
-        routed = route.routed_parse(pages, ignore_patterns=ignore_patterns)
-        routed_path = os.path.join(workdir, "routed")
-        routed_schema = routed.schema
-        routed.write.mode("overwrite").parquet(routed_path)
-        # explicit schema: skips the footer-inference job on read-back
-        ckpt = spark.read.schema(routed_schema).parquet(routed_path)
-        streams["kept"] = ckpt.filter(~F.col("is_ignored")).drop(*route.ROUTE_FLAG_COLS)
-        streams["ignored"] = ckpt.filter(F.col("is_ignored")).select(
-            *[c for c in ("url", "warc_ts", "lang", "text", "shard", "node")
-              if c in ckpt.columns],
-            # ignored_category() always resolves (its CASE has an otherwise),
-            # so this coalesce never fires — it only restores the non-null
-            # schema the lazy CASE expression carries, which the parquet
-            # round-trip erased.
-            F.coalesce(F.col("category"), F.lit("OTHER")).alias("category"),
-        )
-        streams["ttl_pre"] = route.ttl_pre_records(
-            ckpt.filter(F.col("is_ttl")), pages.columns)
-        if ops_checkpoint:
-            ops_path = os.path.join(workdir, "ops")
-            ops_df = route.extract_ops(streams["kept"])
-            if materialize == "bucketed":
-                from ..sinks import bucketed
-
-                streams["ops"], tname = bucketed.write_bucketed(
-                    ops_df, ops_path, key="query_hash",
-                    n_buckets=int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
-                tables.append(tname)
-            else:
-                ops_schema = ops_df.schema
-                ops_df.write.mode("overwrite").parquet(ops_path)
-                streams["ops"] = spark.read.schema(ops_schema).parquet(ops_path)
-        else:
-            # lazy dispatch: each ops sink re-runs the JVM when-cascade over
-            # the kept checkpoint scan — trades one serial write job for a
-            # little repeated codegen work inside already-parallel scans
-            streams["ops"] = route.extract_ops(streams["kept"])
+    routed = route.routed_parse(pages, ignore_patterns=ignore_patterns)
+    if not cache:
+        streams = route.derive_streams(pages, routed)
+        return PipelineResult(streams=streams, sinks=sinks(streams))
+    workdir = workdir or os.path.join(
+        datagen.DATA_ROOT, "tmp", f"stage-{uuid.uuid4().hex[:8]}"
+    )
+    try:
+        ckpt = _checkpoint(routed, os.path.join(workdir, "routed"))
         # client_metadata, auth and conn_lifecycle share ONE scan: each
         # filters to a tiny subset (a few % of rows together), but as
         # separate lazy plans driver_stats' materialization would scan the
@@ -156,9 +86,7 @@ def build(
         # the widest one stored, plus the lifecycle union's start/end pair
         # re-reading the url/ts_str/ctx string columns twice. The
         # union-predicate subset is localCheckpointed lazily ONCE and every
-        # side channel re-applies its exact original filter over it, so rows
-        # and schema are identical to deriving straight from kept (each
-        # record filter implies the union predicate).
+        # side channel applies its own filter over it.
         is_meta = (F.col("comp") == "NETWORK") & (F.col("msg") == "client metadata")
         is_auth = (F.col("comp") == "ACCESS") & (F.col("msg") == "Successfully authenticated")
         is_lifecycle = F.col("msg").isin("Connection accepted", "Connection ended")
@@ -170,24 +98,21 @@ def build(
             "compressors", "a_user", "a_db", "a_mechanism", "a_connection_id",
             "text",
         ).localCheckpoint(eager=False)
-        # re-derive the side channels off the checkpointed parse
-        streams.update(
-            {
-                "errors": route.error_records(streams["kept"]),
-                "transactions": route.transaction_records(streams["kept"]),
-                "client_metadata": route.client_metadata_records(conn_side),
-                "auth": route.auth_records(conn_side),
-                "conn_lifecycle": route.conn_lifecycle_records(conn_side),
-            }
-        )
-    elif cache and materialize == "memory":
-        streams = route.split_streams(pages, ignore_patterns=ignore_patterns)
-        streams["kept"] = streams["kept"].persist(StorageLevel.MEMORY_AND_DISK)
-        streams["ops"] = streams["ops"].persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        streams = route.split_streams(pages, ignore_patterns=ignore_patterns)
+        streams = route.derive_streams(pages, ckpt, conn_side=conn_side)
+        # `ops` is written derived FROM the routed checkpoint —
+        # deriving it from the lazy frame would re-run the Arrow parse over
+        # every kept line (2x parse cost; the round-1 scaling-gate failure).
+        streams["ops"] = _checkpoint(streams["ops"], os.path.join(workdir, "ops"))
+    except BaseException:
+        shutil.rmtree(workdir, ignore_errors=True)
+        raise
+    return PipelineResult(streams=streams, sinks=sinks(streams), workdir=workdir)
 
-    sinks = {
+
+def sinks(streams: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """The report sinks over a stream dict — the one sink table, shared by
+    build and job.run_job's --ns-filter rebuild."""
+    return {
         "main_ops": agg.main_ops(streams["ops"]),
         "ttl_ops": agg.ttl_ops(streams["ttl_pre"]),
         "op_stats": agg.op_stats(streams["ops"]),
@@ -204,17 +129,3 @@ def build(
         "ignored": agg.ignored_stats(streams["ignored"]),
         "ignored_sample": route.ignored_sample(streams["ignored"]),
     }
-    return PipelineResult(streams=streams, sinks=sinks, workdir=workdir, tables=tables)
-
-
-def run_metrics(pages: DataFrame) -> dict[str, int]:
-    """Scan-level routing metrics (ProcessingStats analog)."""
-    from ..functions import prefilter
-
-    text = F.col("text")
-    row = pages.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum(prefilter.is_oversized(text).cast("long")).alias("oversized"),
-        F.sum((~prefilter.is_oversized(text) & prefilter.should_ignore(text)).cast("long")).alias("ignored"),
-    ).collect()[0]
-    return {"total": row["total"], "oversized": row["oversized"], "ignored": row["ignored"]}

@@ -76,6 +76,10 @@ def read_log_files(spark: SparkSession, paths: str | list[str],
                    limit_per_file: int | None = None) -> DataFrame:
     if isinstance(paths, str):
         paths = [paths]
+    if not paths:
+        # Spark would read an empty path list as an empty frame, so a missing
+        # input would surface far downstream as zero rows
+        raise ValueError("read_log_files: no log file paths given")
     zips = [p for p in paths if p.endswith(".zip")]
     texts = [p for p in paths if not p.endswith(".zip")]
     if zips and not texts:

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.util import assert_df_equals_sql
+from tests.util import assert_df_equals_sql, plan_text
 
 import __spark_entry__ as entrymod
 from mongo_log_parser_spark.contracts.data_queries import DATA_QUERIES
@@ -139,7 +139,7 @@ def test_ann_buckets_plan_shuffle_free(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     df = similarity.ann_lsh_buckets(emb)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(df)
     assert "Exchange" not in plan
     assert "ArrowEvalPython" in plan or "PythonUDF" in plan
 
@@ -152,7 +152,7 @@ def test_ivf_assign_plan_shuffle_free(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     df = similarity.ivf_assign(emb)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(df)
     assert "Exchange" not in plan
     assert "MapInPandas" in plan or "PythonUDF" in plan
 

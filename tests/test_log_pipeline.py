@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.util import assert_df_equals_sql
+from tests.util import assert_df_equals_sql, multiset, plan_text
 
 import __spark_entry__ as entrymod
 
@@ -125,7 +125,7 @@ def test_broadcast_join_in_enrich_plan(spark):
     pages = pipeline.read_pages(spark, sf=0.001)
     ll = pipeline.read_lookup(spark, "lang_locale")
     hc = pipeline.read_lookup(spark, "host_class")
-    plan = enrich_pages(pages, ll, hc)._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(enrich_pages(pages, ll, hc))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -138,28 +138,8 @@ def test_pushdown_reaches_scan(spark):
 
     pages = pipeline.read_pages(spark, sf=0.001)
     df = aggregates.op_stats(route.split_streams(pages)["ops"])
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(df)
     assert "html" not in plan  # binary column pruned from the parquet scan
-
-
-def test_ops_checkpoint_lazy_equivalence(spark):
-    """The ops_checkpoint=False path (lazy dispatch off the kept checkpoint)
-    produces identical sink counts to the default checkpointed path."""
-    from pyspark.sql import functions as F
-
-    from mongo_log_parser_spark.plans import pipeline
-
-    pages = pipeline.read_pages(spark, sf=0.001)
-    a = pipeline.build(pages)
-    b = pipeline.build(pages, ops_checkpoint=False)
-    try:
-        for name in ("main_ops", "op_stats", "query_hash", "index_stats"):
-            ca = a.sinks[name].agg(F.sum("count")).collect()[0][0]
-            cb = b.sinks[name].agg(F.sum("count")).collect()[0][0]
-            assert ca == cb, name
-    finally:
-        a.unpersist()
-        b.unpersist()
 
 
 def test_meta_auth_shared_scan_equivalence(spark):
@@ -186,13 +166,76 @@ def test_meta_auth_shared_scan_equivalence(spark):
             assert direct.exceptAll(shared).count() == 0, name
         rdd_ids = set()
         for name in ("client_metadata", "auth", "conn_lifecycle"):
-            df = res.streams[name]
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted")
+            plan = plan_text(res.streams[name])
             assert "Scan parquet" not in plan, name  # reads the checkpoint RDD
             ids = set(re.findall(r"MapPartitionsRDD\[(\d+)\]", plan))
             assert len(ids) == 1, (name, plan[:500])  # even the union's two legs
             rdd_ids |= ids
         assert len(rdd_ids) == 1  # ONE shared subset across all three streams
+    finally:
+        res.unpersist()
+
+
+def test_build_failure_removes_stage_dir(spark, monkeypatch):
+    """A build that raises after its routed checkpoint is written leaves no
+    stage-* directory behind."""
+    import glob
+    import os
+
+    from mongo_log_parser_spark.operators import route
+    from mongo_log_parser_spark.plans import pipeline
+    from mongo_log_parser_spark.sources import datagen
+
+    def failing_extract_ops(kept):
+        raise RuntimeError("injected extract failure")
+
+    stage_glob = os.path.join(datagen.DATA_ROOT, "tmp", "stage-*")
+    pages = pipeline.read_pages(spark, sf=0.001)
+    before = set(glob.glob(stage_glob))
+    monkeypatch.setattr(route, "extract_ops", failing_extract_ops)
+    with pytest.raises(RuntimeError, match="injected extract failure"):
+        pipeline.build(pages)
+    assert set(glob.glob(stage_glob)) == before
+
+
+# pipeline.build sink → the contract log query computing it over the lazy
+# split_streams path
+BUILD_SINK_QUERIES = {
+    "main_ops": "log_main_ops",
+    "ttl_ops": "log_ttl_ops",
+    "op_stats": "log_op_stats",
+    "query_hash": "log_query_hash",
+    "plan_cache": "log_plan_cache",
+    "index_stats": "log_index_stats",
+    "error_codes": "log_error_codes",
+    "transactions": "log_transactions",
+    "slow_planning": "log_slow_planning",
+    "app_conn_stats": "log_app_conn_stats",
+    "driver_stats": "log_driver_stats",
+    "ignored": "log_ignored_categories",
+    "ignored_sample": "log_ignored_sample",
+}
+
+
+def test_contract_queries_match_build_sinks(spark):
+    """One router, two modes: every build sink (checkpointed streams) is
+    row-equal at sf0.01 to the contract query the oracle checks (lazy
+    streams), with p95 rounded the same way on both sides."""
+    from mongo_log_parser_spark.contracts import log_queries
+    from mongo_log_parser_spark.plans import pipeline
+
+    res = pipeline.build(pipeline.read_pages(spark, sf=0.01))
+    try:
+        assert set(res.sinks) == set(BUILD_SINK_QUERIES)
+        for sink, query in BUILD_SINK_QUERIES.items():
+            want = log_queries._round_p95(log_queries.LOG_QUERIES[query](spark, "sf0.01"))
+            got = res.sinks[sink]
+            if sink == "driver_stats":  # the columns log_driver_stats drops
+                got = got.drop("sample_metadata_line", "sample_auth_line")
+            got = log_queries._round_p95(got)
+            assert sorted(got.columns) == sorted(want.columns), sink
+            want_rows = multiset(want.columns, want.collect())
+            assert want_rows, sink
+            assert multiset(got.columns, got.collect()) == want_rows, sink
     finally:
         res.unpersist()

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import json
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from mongo_log_parser_spark.functions.redact import (
@@ -128,6 +128,7 @@ def test_system_fields_preserved(ts, sev, comp, ctx, payload):
 
 @settings(max_examples=100, deadline=None)
 @given(st.text(max_size=200).filter(lambda s: not s.lstrip().startswith("{")))
+@example("0 ")  # valid JSON, but not an object: passes through untrimmed
 def test_non_json_passthrough(s):
     assert redact_log_message(s, True) == s
     assert process_log_message(s, True) == s

@@ -3,7 +3,6 @@ report (K3/A12), humanize helpers (E18) and detectors (E19/E20)."""
 
 from __future__ import annotations
 
-import gzip
 import json
 import os
 import shutil
@@ -13,30 +12,25 @@ from pyspark.sql import functions as F
 
 from mongo_log_parser_spark.sinks import writers
 from mongo_log_parser_spark.sources import datagen, logfiles
+from tests.util import plan_text, write_shard_log_files
 
 
-def _write_log_files(tmp: str, spark) -> list[str]:
-    texts = [
-        r["text"]
-        for r in spark.read.parquet(datagen.ensure_pages(0.001)).select("text").limit(400).collect()
-    ]
-    plain = os.path.join(tmp, "cluster0-shard-01-02.log")
-    with open(plain, "w") as f:
-        f.write("\n".join(texts[:200]))
-    gz = os.path.join(tmp, "cluster0-shard-03-04.log.gz")
-    with gzip.open(gz, "wt") as f:
-        f.write("\n".join(texts[200:]))
-    return [plain, gz]
+def test_read_log_files_rejects_empty_path_list(spark):
+    """A missing input fails loudly instead of reading as zero rows."""
+    import pytest
+
+    with pytest.raises(ValueError, match="no log file paths"):
+        logfiles.read_log_files(spark, [])
 
 
 def test_read_log_files_plain_and_gzip(spark):
     tmp = tempfile.mkdtemp(prefix="mlp-logs-", dir="/root/repo/data")
     try:
-        paths = _write_log_files(tmp, spark)
+        paths = write_shard_log_files(tmp, spark)
         df = logfiles.read_log_files(spark, paths)
         # no per-file row_number window unless --limit is set: the no-limit
         # scan must be shuffle-free (scale: one reducer per file otherwise)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = plan_text(df)
         assert "Exchange" not in plan and "Window" not in plan
         assert df.count() == 400  # .gz read transparently (S2)
         assert df.select("url").distinct().count() == 400  # lineage ids unique
@@ -126,7 +120,7 @@ def test_logfilter_cli(spark):
 
     tmp = tempfile.mkdtemp(prefix="mlp-filter-", dir="/root/repo/data")
     try:
-        paths = _write_log_files(tmp, spark)
+        paths = write_shard_log_files(tmp, spark)
         out = os.path.join(tmp, "filtered")
         logfilter.run(spark, paths, out, limit=100)
         lines = []
@@ -344,7 +338,7 @@ def test_per_shard_rollup(spark):
 
     tmp = tempfile.mkdtemp(prefix="mlp-shards-", dir="/root/repo/data")
     try:
-        paths = _write_log_files(tmp, spark)
+        paths = write_shard_log_files(tmp, spark)
         pages = logfiles.read_log_files(spark, paths)
         s = route.split_streams(pages)
         glob_main = agg.main_ops(s["ops"])
@@ -367,7 +361,7 @@ def test_per_shard_rollup(spark):
 
         assert _key(grouped.collect()) == _key(shard_main.collect())
         # and the grouped plan must be a single aggregation, not N union branches
-        plan = grouped._jdf.queryExecution().executedPlan().toString()
+        plan = plan_text(grouped)
         assert "Union" not in plan
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -396,7 +390,7 @@ def test_logfile_urls_partition_invariant(spark):
     and default partitioning and compare the full url→text mapping."""
     tmp = tempfile.mkdtemp(prefix="mlp-parts-", dir="/root/repo/data")
     try:
-        paths = _write_log_files(tmp, spark)
+        paths = write_shard_log_files(tmp, spark)
 
         def read_urls(max_bytes):
             old = spark.conf.get("spark.sql.files.maxPartitionBytes")
@@ -422,7 +416,7 @@ def test_shards_with_ns_filter_consistent(spark, tmp_path):
 
     tmp = tempfile.mkdtemp(prefix="mlp-nsshard-", dir="/root/repo/data")
     try:
-        paths = _write_log_files(tmp, spark)
+        paths = write_shard_log_files(tmp, spark)
         out = tmp_path / "out"
         args = job.build_parser().parse_args([
             "--logs", *paths, "--out", str(out), "--shards",

@@ -1,6 +1,10 @@
 from __future__ import annotations
 
+import contextlib
+import gzip
+import io
 import math
+import os
 from collections import Counter
 
 
@@ -36,3 +40,29 @@ def assert_df_equals_sql(sdf, con, sql, name=""):
         s_only = list((sm - om).items())[:3]
         o_only = list((om - sm).items())[:3]
         raise AssertionError(f"{name}: value mismatch\n spark-only: {s_only}\n oracle-only: {o_only}")
+
+
+def plan_text(df) -> str:
+    """The plan as the public `df.explain(mode="formatted")` prints it."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode="formatted")
+    return buf.getvalue()
+
+
+def write_shard_log_files(tmp: str, spark) -> list[str]:
+    """400 synthetic log lines as two shard-named files (one plain, one
+    gzip) under `tmp`: shards 01/02 and 03/04."""
+    from mongo_log_parser_spark.sources import datagen
+
+    texts = [
+        r["text"]
+        for r in spark.read.parquet(datagen.ensure_pages(0.001)).select("text").limit(400).collect()
+    ]
+    plain = os.path.join(tmp, "cluster0-shard-01-02.log")
+    with open(plain, "w") as f:
+        f.write("\n".join(texts[:200]))
+    gz = os.path.join(tmp, "cluster0-shard-03-04.log.gz")
+    with gzip.open(gz, "wt") as f:
+        f.write("\n".join(texts[200:]))
+    return [plain, gz]
